@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_model_spark import operators
+
 
 def _compress(parent: DataFrame, max_rounds: int = 40) -> DataFrame:
     """Pointer-jump a static parent forest ``(node, par)`` to fixpoint:
@@ -62,22 +64,19 @@ def _compress(parent: DataFrame, max_rounds: int = 40) -> DataFrame:
     raise RuntimeError(f"forest compression did not converge in {max_rounds} rounds")
 
 
-# Below this many (long, long) edge rows (~3 MB) the remaining graph is
-# finished in ONE executor task (``_local_components``): every further
-# hook/compress/contract round would pay scheduler latency per round, which
-# dominates wall time on a tiny graph (measured: 2.7 s for 256 edges at 32
-# partitions; ~1.5 s even coalesced to one partition, vs one ~0.2 s task
-# for the local finish). This is the standard forest-contraction endgame —
-# contract until the graph fits a worker, then solve it there. The gate
+# Local finish: once the (remaining) edge list is at most
+# operators.LOCAL_FINISH_ROWS rows it is solved in ONE executor task —
+# every further hook/compress/contract round would pay scheduler latency
+# (measured: 2.7 s for 256 edges at 32 partitions; ~1.5 s even coalesced
+# to one partition, vs one ~0.2 s task for the local finish). The gate
 # rides on the frontier count each phase already computes, so it costs
 # nothing, and a graph that is still large keeps the distributed loop.
-SMALL_GRAPH_ROWS = 200_000
 
 
 def _local_components(g: DataFrame) -> DataFrame:
     """Single-task union-find over a graph that fits one partition —
     EXECUTOR-side via mapInPandas (the driver never sees an edge; the
-    input is bounded by ``SMALL_GRAPH_ROWS`` ≈ 3 MB by the caller's gate).
+    input is bounded by the caller's ``LOCAL_FINISH_ROWS`` gate, ≈ 3 MB).
     Union-by-min (the larger root attaches under the smaller) makes every
     final root the minimum id of its component — the same contract as the
     distributed loop. The iterator covers ALL Arrow batches of the single
@@ -120,20 +119,15 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_phases: int = 30,
-    small_graph_rows: int | None = None,
 ) -> DataFrame:
     """Undirected connected components. ``edges``: two long columns.
 
     Returns ``(node, component)`` where ``component`` is the minimum node id
     in the node's component — deterministic, join-able back onto the doc
-    table to pick keep-first survivors.
-
-    ``small_graph_rows`` overrides the local-finish gate (default
-    ``SMALL_GRAPH_ROWS``); tests pass 0 to force the distributed loop
-    end-to-end.
+    table to pick keep-first survivors. A graph (or contracted remainder)
+    of at most ``operators.LOCAL_FINISH_ROWS`` symmetrized edges finishes
+    in one task (``_local_components``).
     """
-    if small_graph_rows is None:
-        small_graph_rows = SMALL_GRAPH_ROWS
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # symmetrize; materialize once (the count below is the action) so the
     # iteration never re-executes the upstream pipeline (e.g. MinHash-LSH)
@@ -146,7 +140,7 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     frontier = g.count()
-    if 0 < frontier <= small_graph_rows:
+    if 0 < frontier <= operators.LOCAL_FINISH_ROWS:
         return _local_components(g)
     labels = (
         g.select(F.col("u").alias("node")).distinct().withColumn("component", F.col("node"))
@@ -189,7 +183,7 @@ def connected_components(
         )
         # one job: materializes the contracted graph AND is the loop exit
         frontier = g.count()
-        if 0 < frontier <= small_graph_rows:
+        if 0 < frontier <= operators.LOCAL_FINISH_ROWS:
             # local finish on the CONTRACTED graph, folded through labels
             # exactly like a phase's roots
             local = _local_components(g).select(
@@ -212,7 +206,7 @@ def connected_components(
 def _local_pagerank(e: DataFrame, damping: float, n_iter: int) -> DataFrame:
     """Single-task power iteration over a graph that fits one partition —
     EXECUTOR-side via mapInPandas (bounded by the caller's
-    ``SMALL_GRAPH_ROWS`` gate, like ``_local_components``). Replays the
+    ``LOCAL_FINISH_ROWS`` gate, like ``_local_components``). Replays the
     distributed loop's recurrence exactly: uniform 1/n init, per-edge
     contribution rank/outdeg, dangling mass (nodes with no out-edges)
     redistributed uniformly, rank = (1-d)/n + d·(contrib + dangling/n).
@@ -258,7 +252,6 @@ def pagerank(
     dst: str = "id_b",
     damping: float = 0.85,
     n_iter: int = 20,
-    small_graph_rows: int | None = None,
 ) -> DataFrame:
     """Directed PageRank, fixed ``n_iter`` power iterations (the production
     choice: deterministic output and runtime, no convergence-test join).
@@ -276,13 +269,10 @@ def pagerank(
     Lineage is cut by the checkpoint so iteration N's plan doesn't replay
     iterations 1..N-1.
 
-    ``small_graph_rows`` overrides the local-finish gate (default
-    ``SMALL_GRAPH_ROWS``, applied to BOTH node and edge count); tests pass
-    0 to force the distributed loop end-to-end — the same override contract
-    as ``connected_components``.
+    A graph whose node AND edge counts are both at most
+    ``operators.LOCAL_FINISH_ROWS`` runs the whole power method in one task
+    (``_local_pagerank``).
     """
-    if small_graph_rows is None:
-        small_graph_rows = SMALL_GRAPH_ROWS
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -308,8 +298,9 @@ def pagerank(
     n, n_dangling, n_edges = counts["n"], counts["n_dangling"], counts["n_edges"]
     if n == 0:
         return base.select("node", F.lit(0.0).alias("rank"))
-    if n <= small_graph_rows and n_edges <= small_graph_rows:
-        # Local finish (r11), same endgame as connected_components'
+    gate = operators.LOCAL_FINISH_ROWS
+    if n <= gate and n_edges <= gate:
+        # Local finish, same endgame as connected_components'
         # _local_components: iterate the whole power method in ONE executor
         # task over the checkpointed edge list instead of n_iter rounds of
         # tiny distributed join+agg jobs (measured ~4 s of per-iteration
@@ -382,7 +373,7 @@ def dedup_survivors(
 
 def _local_bfs(g: DataFrame, source: int | None) -> DataFrame:
     """Single-task BFS over a graph that fits one partition — EXECUTOR-side
-    via mapInPandas (bounded by the caller's ``small_graph_rows`` gate,
+    via mapInPandas (bounded by the caller's ``LOCAL_FINISH_ROWS`` gate,
     like ``_local_components``/``_local_pagerank``). Input is the already
     symmetrized, self-loop-free, distinct edge list; depth labels are
     traversal-order independent, so deque BFS reproduces the distributed
@@ -425,7 +416,6 @@ def bfs_depths(
     src: str = "id_a",
     dst: str = "id_b",
     max_depth: int = 30,
-    small_graph_rows: int | None = None,
 ) -> DataFrame:
     """Unit-weight single-source shortest paths (BFS layers) on an
     undirected graph: returns ``(node, depth)`` for every node reachable
@@ -440,15 +430,12 @@ def bfs_depths(
     materializing action for the lazy checkpoint) — never data. Rounds =
     graph eccentricity of the source, the intrinsic lower bound for BFS.
 
-    ``small_graph_rows`` overrides the local-finish gate (default
-    ``SMALL_GRAPH_ROWS``); tests pass 0 to force the distributed loop
-    end-to-end — the same override contract as ``connected_components``.
-    Unlike components, BFS has no doubling shortcut — the distributed
-    loop pays one round per level — so the single-task endgame saves
-    eccentricity-many scheduler round-trips, not just a handful.
+    A graph of at most ``operators.LOCAL_FINISH_ROWS`` symmetrized edges
+    runs in one task (``_local_bfs``). Unlike components, BFS has no
+    doubling shortcut — the distributed loop pays one round per level — so
+    the single-task endgame saves eccentricity-many scheduler round-trips,
+    not just a handful.
     """
-    if small_graph_rows is None:
-        small_graph_rows = SMALL_GRAPH_ROWS
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     g = (
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -457,7 +444,7 @@ def bfs_depths(
         .localCheckpoint(eager=False)
     )
     n_edges = g.count()
-    if 0 < n_edges <= small_graph_rows:
+    if 0 < n_edges <= operators.LOCAL_FINISH_ROWS:
         # local finish; max_depth is enforced HERE (driver-side, after the
         # lazy checkpoint is materialized by the max() aggregate) so the
         # over-eccentricity error is the same RuntimeError the distributed

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreduce_model_spark import operators
+
 __all__ = [
     "dot",
     "l2_norm",
@@ -209,22 +211,18 @@ def lsh_cosine_topk(
 
 
 def _rank_centroids(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    max_rank: int,
-    join_back: bool = False,
+    vectors: DataFrame, centroids: DataFrame, max_rank: int
 ) -> DataFrame:
     """Score every vector against every (broadcast) centroid, keep the
     ``max_rank`` nearest cells. Output adds ``cid`` (and ``crank`` when
     ``max_rank`` > 1). Tie-break is (score desc, cid asc) in both paths.
 
     Only the multi-probe (query-side, small) path pays a window; rank-1 —
-    the CORPUS-side assignment in IVF and every k-means iteration — is a
-    ``min_by`` aggregate whose map-side partial collapses the ×centroids
-    fan-out before the exchange. The window formulation would shuffle
-    corpus × n_centroids rows (1B vectors × 1000 cells = 1T rows); the
-    aggregate shuffles one combined row per vector, and AQE coalesces
-    from there."""
+    the CORPUS-side assignment in IVF — is a ``min_by`` aggregate whose
+    map-side partial collapses the ×centroids fan-out before the exchange.
+    The window formulation would shuffle corpus × n_centroids rows (1B
+    vectors × 1000 cells = 1T rows); the aggregate shuffles one combined
+    row per vector, and AQE coalesces from there."""
     scored = vectors.crossJoin(F.broadcast(centroids)).withColumn(
         "_cscore", dot(F.col("v"), F.col("ce")) / (F.col("n") * F.col("cn"))
     )
@@ -240,34 +238,17 @@ def _rank_centroids(
             .when(F.col("_cscore").isNull(), F.lit(float("inf")))
             .otherwise(-F.col("_cscore"))
         )
-        # Two shapes for the same argmin, chosen by the CALLER's k:
-        # - join_back=True (large k): aggregate ONLY (vid -> winning cid)
-        #   and join the payload columns back by vid. Carrying the vector
-        #   inside the min_by buffer weighs every aggregation/sort row
-        #   down with the 512-byte array — measured Java-heap OOM at 500k
-        #   vectors × 708 centroids under the 8g harness heap
-        #   (semantic_dedup_scaled, gen-sf1, r8). Exchange bytes are the
-        #   same either way; buffers drop to ~30 B/row, and a caller that
-        #   persists ``vectors`` hash-partitioned by vid gets the
-        #   join-back without re-exchanging the corpus.
-        # - join_back=False (small k, the k=8 exemplar faces): keep the
-        #   payload in the buffer and skip the join — measured 1.7× faster
-        #   at k=8/sf0.1 (kmeans_embeddings 2.4 s vs 4.1 s), where buffer
-        #   weight never threatens the heap.
-        if join_back:
-            best = scored.groupBy("vid").agg(
-                F.min_by(
-                    F.col("cid"), F.struct(order_key.alias("neg"), F.col("cid"))
-                ).alias("cid")
-            )
-            return vectors.join(best, "vid").select("vid", *passthrough, "cid")
+        # aggregate ONLY (vid -> winning cid) and join the payload columns
+        # back by vid: carrying the vector inside the min_by buffer weighs
+        # every aggregation/sort row down with the 512-byte array (measured
+        # Java-heap OOM at 500k vectors × 708 centroids under an 8g heap).
+        # Exchange bytes are the same either way; buffers drop to ~30 B/row.
         best = scored.groupBy("vid").agg(
             F.min_by(
-                F.struct(*passthrough, "cid"),
-                F.struct(order_key.alias("neg"), F.col("cid")),
-            ).alias("_best")
+                F.col("cid"), F.struct(order_key.alias("neg"), F.col("cid"))
+            ).alias("cid")
         )
-        return best.select("vid", *[f"_best.{c}" for c in passthrough], "_best.cid")
+        return vectors.join(best, "vid").select("vid", *passthrough, "cid")
     w = Window.partitionBy("vid").orderBy(F.col("_cscore").desc(), F.col("cid"))
     return (
         scored.withColumn("crank", F.row_number().over(w))
@@ -303,7 +284,7 @@ def ivf_cosine_topk(
     cents = v.filter(F.col("vid") % stride == 0).select(
         F.col("vid").alias("cid"), F.col("v").alias("ce"), F.col("n").alias("cn")
     )
-    cells = _rank_centroids(v, cents, 1, join_back=True).select(
+    cells = _rank_centroids(v, cents, 1).select(
         F.col("vid").alias("vec_id"), F.col("v").alias("cv"), F.col("n").alias("cnm"), "cid"
     )
     q = queries.select(
@@ -368,107 +349,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def kmeans_fit(
-    vectors: DataFrame,
-    k: int = 8,
-    n_iter: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    return_assign: bool = False,
-) -> DataFrame:
-    """Spherical k-means (Lloyd's) — the one-training-pass upgrade to
-    ``ivf_cosine_topk``'s deterministic slice quantizer.
-
-    Deterministic init: the k lowest-id vectors seed the centroids (no
-    RNG — reproducible across runs and engines). Each iteration is
-
-    1. assign: every vector scores against the BROADCAST k×dim centroid
-       set and keeps its best cell (``_rank_centroids`` — a narrow pass
-       over the corpus, no corpus shuffle), then
-    2. update: per-(cell, dimension) mean via posexplode + two-level
-       aggregate (the embedding_centroids shape — partial sums absorb the
-       dim fan-out map-side; the shuffle carries k×dim keys only).
-
-    The new centroids are eagerly localCheckpoint-ed: k×dim rows, so the
-    materialization is trivially small, the growing lineage is cut every
-    iteration, and the next broadcast reads a stable tiny frame. Cosine
-    assignment makes centroid normalization unnecessary (the norm divides
-    out). At 100 TB each iteration = one broadcast + one tiny-key shuffle
-    — the canonical distributed Lloyd's.
-
-    Returns (cid, centroid array<double>, n_members) for the final
-    assignment.
-    """
-    # the corpus (with norms) feeds every iteration's assign pass — persist
-    # once so 1+n_iter+1 passes read cached columns, not parquet + re-normed
-    # arrays (ContextCleaner unpersists when the plan goes unreferenced).
-    # Hash-partitioned by vid: _rank_centroids' join-back (see there) then
-    # lines up with the groupBy("vid") output partitioning, so no assign
-    # pass ever re-exchanges the corpus.
-    # past ~64 cells the min_by buffer weight dominates (see
-    # _rank_centroids): switch the assign passes to the join-back shape,
-    # and persist the corpus vid-partitioned so those joins re-use the
-    # partitioning. Small k keeps the buffer shape — no join, so the
-    # repartition would be a pure extra exchange.
-    heavy_k = k > 64
-    v = vectors.select(
-        F.col(id_col).alias("vid"), _as_double(vec_col).alias("v")
-    ).withColumn("n", l2_norm(F.col("v")))
-    v = (v.repartition("vid") if heavy_k else v).persist()
-    seeds = v.orderBy("vid").limit(k)
-    w = Window.orderBy("vid")  # k rows — single-partition window is fine
-    cents = seeds.select(
-        (F.row_number().over(w) - 1).alias("cid"),
-        F.col("v").alias("ce"),
-        F.col("n").alias("cn"),
-    ).localCheckpoint(eager=True)
-    for _ in range(n_iter):
-        assign = _rank_centroids(v, cents, 1, join_back=heavy_k)
-        upd = (
-            assign.select("cid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("x").alias("c"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s["c"],
-                ).alias("ce")
-            )
-        )
-        new_cents = upd.withColumn("cn", l2_norm(F.col("ce"))).localCheckpoint(
-            eager=True
-        )
-        # a cell that lost every member emits no mean row — carry its
-        # previous centroid forward (standard Lloyd's degeneracy handling)
-        # instead of silently shrinking k for the rest of the run. The
-        # count() is on the k-row checkpointed frame (free); the join runs
-        # only on the degenerate path.
-        if new_cents.count() < k:
-            new_cents = (
-                cents.select("cid", F.col("ce").alias("prev_ce"))
-                .join(new_cents.drop("cn"), "cid", "left")
-                .select("cid", F.coalesce("ce", "prev_ce").alias("ce"))
-                .withColumn("cn", l2_norm(F.col("ce")))
-                .localCheckpoint(eager=True)
-            )
-        cents = new_cents
-    final = _rank_centroids(v, cents, 1, join_back=heavy_k)
-    if return_assign:
-        # (vid, v, n, cid) — consumers like semantic_dedup score member
-        # pairs; handing the assignment out saves them re-running the
-        # broadcast assign pass against the returned centroids
-        return final
-    counts = final.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
-    return (
-        cents.select("cid", F.col("ce").alias("centroid"))
-        .join(counts, "cid", "left")
-        .select(
-            "cid", "centroid", F.coalesce("n_members", F.lit(0)).alias("n_members")
-        )
-    )
-
-
 def py_ldot(a, b):
     """Driver-side dot product with the SAME left-to-right association as
     pq_fit's udot fold and DuckDB's list_dot_product — load-bearing for
@@ -482,15 +362,15 @@ def py_ldot(a, b):
     return acc
 
 
-def _assign_arrow(v: DataFrame, cents, payload: bool = False) -> DataFrame:
-    """(vid → cid) against a NUMPY centroid matrix, one BLAS matmul per
-    Arrow batch — the fast-path twin of ``_rank_centroids``'s rank-1 mode.
-    ``payload=True`` additionally carries (v, n) through the batch so the
-    caller gets the full assignment frame without a join back to the
-    corpus (r11: kmeans_fit_arrow's final step).
+def _assign_arrow(v: DataFrame, cents) -> DataFrame:
+    """(vid, v, n) → (vid, v, n, cid) against a NUMPY centroid matrix, one
+    BLAS matmul per Arrow batch — the fast-path twin of
+    ``_rank_centroids``'s rank-1 mode. The batch already holds v and n, so
+    emitting them gives the caller the full assignment frame without a
+    corpus-sized join back.
 
     The JVM expression dot (zip_with + aggregate fold) measures ~3M
-    64-dim dots/s on 32 cores (PLANS.md r8 microbench; the unrolled MAC
+    64-dim dots/s on 32 cores (PLANS.md microbench; the unrolled MAC
     form is 7.5× slower still — codegen blowup), so an N×k assign pass at
     k = √N dominates wall-clock from ~50k vectors. ``M @ C.T`` is the
     same arithmetic at BLAS rate (~10⁹ MACs/s/core). Decision parity with
@@ -518,25 +398,14 @@ def _assign_arrow(v: DataFrame, cents, payload: bool = False) -> DataFrame:
             flat = np.asarray(col.flatten(), dtype=np.float64)
             mat = flat.reshape(len(vid), -1)
             cid = np.argmax(mat @ cnorm.T, axis=1).astype(np.int32)
-            if payload:
-                # the batch already holds v and n — emitting them here
-                # makes the final (vid -> cid) attachment join-free: one
-                # cached-corpus pass instead of a corpus-sized join (the
-                # join re-derived what this function had in hand)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(vid), b.column("v"), b.column("n"), pa.array(cid)],
-                    ["vid", "v", "n", "cid"],
-                )
-            else:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(vid), pa.array(cid)], ["vid", "cid"]
-                )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(vid), b.column("v"), b.column("n"), pa.array(cid)],
+                ["vid", "v", "n", "cid"],
+            )
 
-    if payload:
-        return v.select("vid", "v", "n").mapInArrow(
-            fn, "vid long, v array<double>, n double, cid int"
-        )
-    return v.select("vid", "v").mapInArrow(fn, "vid long, cid int")
+    return v.select("vid", "v", "n").mapInArrow(
+        fn, "vid long, v array<double>, n double, cid int"
+    )
 
 
 def _partial_sums_arrow(v: DataFrame, cents) -> DataFrame:
@@ -576,14 +445,10 @@ def _partial_sums_arrow(v: DataFrame, cents) -> DataFrame:
     return v.select("vid", "v").mapInArrow(fn, "cid int, pcnt long, psum array<double>")
 
 
-# Local-finish gate for kmeans_fit_arrow: below these bounds the whole
-# Lloyd's loop runs in ONE executor task (the operators/graph.py
-# SMALL_GRAPH_ROWS endgame applied to clustering) instead of n_iter
-# driver-collected partial-sum jobs. Both bounds matter: row count caps the
-# single-task memory (200k × 64 doubles ≈ 100 MB), and rows×k caps the
-# single-task BLAS work (2e7 × dim ≈ 1.3 GFLOP ≈ sub-second); a gen-sf1
+# k-means' second local-finish bound: beside the row gate
+# (operators.LOCAL_FINISH_ROWS, which caps single-task memory) rows×k caps
+# the single-task BLAS work (2e7 × dim ≈ 1.3 GFLOP ≈ sub-second). A gen-sf1
 # run (500k vectors, k=√N≈707) exceeds both and keeps the distributed loop.
-SMALL_KMEANS_ROWS = 200_000
 SMALL_KMEANS_ROWS_X_K = 20_000_000
 
 
@@ -658,31 +523,29 @@ def kmeans_fit_arrow(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     return_centroids: bool = False,
-    small_rows: int | None = None,
 ):
-    """``kmeans_fit(return_assign=True)`` with the two corpus-sized inner
-    products moved to Arrow/BLAS — the configuration for LARGE k (the
-    k ∝ √N SemDeDup recipe), where the JVM expression dot is the
-    measured bottleneck and the min_by buffer weight OOMs (r8, gen-sf1).
+    """Spherical k-means (Lloyd's) with the corpus-sized inner products on
+    Arrow/BLAS. Returns the final assignment (vid, v, n, cid); with
+    ``return_centroids=True`` also the final centroid frame
+    (cid int, centroid array<double>).
 
-    Same recurrence, same determinism: lowest-id seeding, argmax cosine
-    with lowest-cid ties, per-dimension means, empty-cell carry-forward —
-    each implemented so the decision sequence matches kmeans_fit and the
-    unrolled DuckDB oracle (see _assign_arrow on ulp parity). Driver
-    traffic per iteration is the k×dim mean matrix (the documented
-    bounded-metadata pattern; ≤4096×64 doubles = 2 MB at the cap) — the
-    centroids re-enter each pass as a numpy closure constant, never a
-    join side. Scale: per iteration ONE narrow cached-corpus pass whose
-    exchange is ≤ k rows per batch. r12: the ``repartition("vid")`` that
-    used to precede the persist is GONE — it existed for the final
-    (vid → cid) join-back that r11's payload mode eliminated, so it had
-    become a pure extra corpus exchange (guide §2.4); with payload mode
-    every pass over the cache is narrow. ``return_centroids=True``
-    additionally returns the final centroid frame
-    (cid int, centroid array<double>) — the kmeans_embeddings report face
-    consumes it. ``small_rows`` overrides the local-finish row gate
-    (default ``SMALL_KMEANS_ROWS``); tests pass 0 to force the
-    distributed loop — the graph operators' override contract."""
+    Deterministic recurrence, the contract the DuckDB oracle
+    (queries_similarity._kmeans_cte) unrolls: the k lowest-id vectors seed
+    the centroids in id order; each iteration assigns every vector to its
+    argmax-cosine centroid (ties → lowest cid), then sets each centroid to
+    its members' per-dimension mean; a cell that lost every member keeps
+    its previous centroid; a final pass assigns against the last
+    centroids. BLAS reassociates the sums at ulp level (see _assign_arrow
+    on decision parity).
+
+    Two regimes, one recurrence. At most ``operators.LOCAL_FINISH_ROWS``
+    rows and ``SMALL_KMEANS_ROWS_X_K`` rows×k, the whole loop runs in one
+    task (``_local_lloyd``). Otherwise each iteration is ONE narrow pass
+    over the persisted corpus whose exchange is ≤ k partial-sum rows per
+    batch, and the k×dim mean matrix (≤4096×64 doubles = 2 MB) is the only
+    driver traffic — the centroids re-enter each pass as a numpy closure
+    constant, never a join side; the final assignment rides out of the
+    same mapInArrow pass that computes it, so no pass joins the corpus."""
     import numpy as np
 
     v = (
@@ -694,23 +557,21 @@ def kmeans_fit_arrow(
     n_rows = v.count()
     if n_rows < k:
         raise ValueError(f"kmeans_fit_arrow: k={k} > corpus size {n_rows}")
-    gate = SMALL_KMEANS_ROWS if small_rows is None else small_rows
+    gate = operators.LOCAL_FINISH_ROWS
     if n_rows <= gate and n_rows * k <= SMALL_KMEANS_ROWS_X_K:
         mixed = v.coalesce(1).mapInPandas(
             _local_lloyd(k, n_iter),
             "vid long, v array<double>, n double, cid int,"
             " ccid int, ce array<double>",
         )
-        assign = mixed.where(F.col("vid").isNotNull()).select(
-            "vid", "v", "n", "cid"
-        )
         if return_centroids:
             # both faces filter the one mixed task output — persist it so
             # the Lloyd task runs once, not once per face
             mixed = mixed.persist()
-            assign = mixed.where(F.col("vid").isNotNull()).select(
-                "vid", "v", "n", "cid"
-            )
+        assign = mixed.where(F.col("vid").isNotNull()).select(
+            "vid", "v", "n", "cid"
+        )
+        if return_centroids:
             cents_df = mixed.where(F.col("ccid").isNotNull()).select(
                 F.col("ccid").alias("cid"), F.col("ce").alias("centroid")
             )
@@ -733,11 +594,7 @@ def kmeans_fit_arrow(
         for r in upd:
             new[r["cid"], r["pos"]] = r["s"] / r["c"]
         cents = new
-    # payload mode: the final assignment rides out of the SAME cached-corpus
-    # mapInArrow pass that computes it — no corpus-sized join (r11; the old
-    # v ⋈ _assign_arrow(v) shape re-read the persisted corpus on both join
-    # sides and exchanged the narrow side)
-    assign = _assign_arrow(v, cents, payload=True)
+    assign = _assign_arrow(v, cents)
     if return_centroids:
         cents_df = v.sparkSession.createDataFrame(
             [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
@@ -754,10 +611,9 @@ def semantic_max_cosine_arrow(assign: DataFrame) -> DataFrame:
     cid shuffle this grouping pays is the algorithm's one unavoidable
     corpus exchange). Emits ONE row per member — (vid, cid, mc), mc NULL
     for each cluster's lowest-id member — so the caller needs NO join
-    back onto the assignment frame (r11: the old (vid_a, mc)-only shape
-    forced assign ⋈ mc, which re-ran the whole assign pass for the second
-    consumer). Row blocks bound peak memory at ~block × |cluster|
-    doubles."""
+    back onto the assignment frame (a join would re-run the whole assign
+    pass for its second consumer). Row blocks bound peak memory at
+    ~block × |cluster| doubles."""
 
     def score(pdf):
         import numpy as np
@@ -811,12 +667,12 @@ def pq_fit(
     partial-min row per (vector, subspace); the update is a
     (s, cid, pos)-keyed mean whose map-side partials collapse the fan-out
     to m·k·(dim/m)=1024 rows per exchange, and only those 1024 doubles
-    reach the driver per iteration (kmeans_fit's loop discipline with
-    quality_classifier's literal re-entry). The argmin key rk =
-    c·c − 2·v·c drops the per-row constant v·v (winner unchanged; full
-    dist² is reassembled as v·v + rk where MSE needs it), with the same
-    left-to-right MACs as DuckDB's list_dot_product, so the whole
-    recurrence is hash-checkable; empty cells carry forward (Lloyd's
+    reach the driver per iteration (kmeans_fit_arrow's bounded-metadata
+    loop discipline with quality_classifier's literal re-entry). The
+    argmin key rk = c·c − 2·v·c drops the per-row constant v·v (winner
+    unchanged; full dist² is reassembled as v·v + rk where MSE needs it),
+    with the same left-to-right MACs as DuckDB's list_dot_product, so the
+    whole recurrence is hash-checkable; empty cells carry forward (Lloyd's
     degeneracy).
 
     Returns (vec_id, codes array<int> length m, mse double); with

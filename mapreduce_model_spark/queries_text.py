@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from mapreduce_model_spark import operators
 from mapreduce_model_spark.functions.partitioning import spread_for_fanout
 from mapreduce_model_spark.functions.rounding import rnd
 from mapreduce_model_spark.functions.text import (
@@ -1785,12 +1786,6 @@ def dsir_importance(spark, sf_dir):
 _QC_B = 64  # hashed feature buckets (+1 bias term)
 _QC_ITERS = 10
 _QC_LR = 2.0
-# Below this many docs the whole GD loop runs in ONE executor task (numpy)
-# instead of 10 driver-collected aggregate jobs — the operators/graph.py
-# SMALL_GRAPH_ROWS endgame applied to training. 200k×(65 doubles+id) ≈
-# 110 MB in a single task, fine; at 100 TB doc counts the distributed
-# 65-buffer aggregate loop below stays the path.
-_QC_LOCAL_DOCS = 200_000
 
 
 def _qc_oracle() -> str:
@@ -1878,10 +1873,14 @@ def quality_classifier(spark, sf_dir):
     removed per-step row materialization, which matters when partitions
     carry millions of docs, not thousands. Hashes identical (re-verified
     sf0.001/sf0.01); only the 65-double weight vector ever reaches the
-    driver (kmeans_fit's loop discipline). At 100 TB: 10 passes over a
-    cached narrow frame, one 65-buffer partial-agg row per partition,
-    520-byte driver traffic per step. Scoring re-enters weights as a
-    literal — zero exchanges, like jl_projection."""
+    driver. At 100 TB: 10 passes over a cached narrow frame, one
+    65-buffer partial-agg row per partition, 520-byte driver traffic per
+    step. Scoring re-enters weights as a literal — zero exchanges, like
+    jl_projection.
+
+    Local finish: at most operators.LOCAL_FINISH_ROWS docs (200k × 65
+    doubles ≈ 110 MB) run all GD steps and the scoring in one executor
+    task instead."""
     docs = (
         spread_for_fanout(table(spark, sf_dir, "documents"), "doc_id")
         .select("doc_id", "source", words_array("text").alias("words"))
@@ -1910,12 +1909,11 @@ def quality_classifier(spark, sf_dir):
     feats = per_doc.select("doc_id", x.alias("x"), y.alias("y")).persist()
     n_docs = feats.count()
 
-    if n_docs <= _QC_LOCAL_DOCS:
-        # Local finish (r12): all 10 GD iterations + the final scoring in
+    if n_docs <= operators.LOCAL_FINISH_ROWS:
+        # Local finish: all 10 GD iterations + the final scoring in
         # ONE executor task over the persisted feature frame — numpy matvec
         # instead of 10 collect() jobs each paying scheduler latency and an
-        # interpreted 65-element HOF transform per row (guide §2 job
-        # overhead + §4 vectorize-in-native-code). Float parity: X@w and
+        # interpreted 65-element HOF transform per row. Float parity: X@w and
         # X.T@(sig−y) reassociate the 65-term sums at ~1e-16 — the same
         # magnitude the oracle docstring already budgets for cross-engine
         # summation order, far below the 1e-4 output rounding. The output
@@ -2096,15 +2094,6 @@ def _bpe_oracle(steps: int = _BPE_STEPS) -> str:
     return sql + "\n" + "\nUNION ALL\n".join(selects)
 
 
-# Below this many dictionary rows the whole greedy merge loop runs in ONE
-# executor task (pure Python over the word-frequency dictionary) instead of
-# `steps` rounds of tiny distributed explode/agg/argmax jobs — the
-# operators/graph.py SMALL_GRAPH_ROWS endgame applied to tokenizer
-# training. At 100 TB vocabularies (millions of rows) the distributed loop
-# below stays the path.
-_BPE_LOCAL_VOCAB = 200_000
-
-
 def _bpe_local_fn(steps: int):
     """Single-task greedy BPE over the full dictionary — replays the
     distributed loop's decision sequence EXACTLY: pair counts are
@@ -2186,7 +2175,7 @@ def _bpe_run(spark, sf_dir, steps: int = _BPE_STEPS):
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    # LAZY checkpoints throughout the loop (r11): each step's argmax
+    # LAZY checkpoints throughout the loop: each step's argmax
     # collect is the action that materializes the previous rewrite, so a
     # step costs ONE job instead of two (measured 35 -> 24 jobs/run,
     # 2.9 -> 2.45 s at sf0.1, merge list bit-identical). Same fusion as
@@ -2197,13 +2186,14 @@ def _bpe_run(spark, sf_dir, steps: int = _BPE_STEPS):
         F.trim(F.regexp_replace("word", "(.)", r"$1 ")).alias("seg"),
     ).localCheckpoint(eager=False)
 
-    # Local finish (r12): the count materializes the checkpoint AND gates.
-    # BPE trains on the word-frequency DICTIONARY (Zipf-bounded), so below
-    # the gate ALL `steps` merge rounds run in one executor task instead of
-    # `steps` × (pair-explode shuffle + argmax collect) jobs — at sf0.1 the
-    # loop is pure scheduler latency (guide §2). Decision parity is
-    # documented at _bpe_local_fn.
-    if cur.count() <= _BPE_LOCAL_VOCAB:
+    # Local finish: the count materializes the checkpoint AND gates. BPE
+    # trains on the word-frequency DICTIONARY (Zipf-bounded), so at most
+    # operators.LOCAL_FINISH_ROWS words run ALL `steps` merge rounds in one
+    # executor task instead of `steps` × (pair-explode shuffle + argmax
+    # collect) jobs — at sf0.1 the loop is pure scheduler latency. At 100 TB
+    # vocabularies (millions of rows) the distributed loop below stays the
+    # path. Decision parity is documented at _bpe_local_fn.
+    if cur.count() <= operators.LOCAL_FINISH_ROWS:
         mixed = cur.coalesce(1).mapInPandas(
             _bpe_local_fn(steps),
             "step long, pair string, merged string, cnt long,"

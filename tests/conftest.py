@@ -1,8 +1,10 @@
 import pytest
 
-from mapreduce_model_spark import get_spark
+from mapreduce_model_spark import get_spark, operators
 
 SF_DIR = "/root/testdata/sf0.001"
+
+LOCAL_FINISH_DEFAULT = operators.LOCAL_FINISH_ROWS
 
 
 @pytest.fixture(scope="session")
@@ -15,3 +17,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def set_local_finish(monkeypatch):
+    """Setter for the one local-finish gate (operators.LOCAL_FINISH_ROWS)
+    that every gated operator reads: ``set_local_finish(0)`` forces the
+    distributed loops, ``None`` restores the production default. Undone
+    when the test ends."""
+
+    def set_rows(rows):
+        monkeypatch.setattr(
+            operators,
+            "LOCAL_FINISH_ROWS",
+            LOCAL_FINISH_DEFAULT if rows is None else rows,
+        )
+
+    return set_rows

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_model_spark.registry import table
 from mapreduce_model_spark.sources.files import CORRUPT_COL, read_csv, read_jsonl
+from tests.pymodel import SMALL_MANIFEST
 
 DDL = "l_orderkey bigint, l_linenumber int, l_quantity double, l_returnflag string"
 
@@ -104,7 +105,7 @@ def test_manifest_datasource_matches_manifest_reader(spark):
     from mapreduce_model_spark.sources.manifest import read_corpus
     from mapreduce_model_spark.sources.pyds import register
 
-    manifest = "/root/reference/checker/test_small.txt"
+    manifest = SMALL_MANIFEST
     register(spark)
     ds = spark.read.format("manifest_corpus").option("path", manifest).load()
     assert ds.schema.simpleString() == "struct<doc_id:bigint,text:string>"
@@ -161,7 +162,7 @@ def test_manifest_datasource_streams_incrementally(spark, tmp_path):
 
     from mapreduce_model_spark.sources.pyds import register
 
-    manifest = "/root/reference/checker/test_small.txt"
+    manifest = SMALL_MANIFEST
     register(spark)
 
     stream = (

@@ -33,10 +33,11 @@ def _union_find(edges):
 
 
 @pytest.mark.parametrize("gate", [None, 0], ids=["local-finish", "distributed"])
-def test_connected_components_random_graphs(spark, gate):
+def test_connected_components_random_graphs(spark, set_local_finish, gate):
     """gate=None exercises the production single-task local finish;
     gate=0 forces the distributed hook/compress/contract loop end-to-end
     (the 100 TB path) — both must match driver union-find exactly."""
+    set_local_finish(gate)
     rng = random.Random(7)
     for trial in range(3):
         nodes = list(range(trial * 1000, trial * 1000 + 120))
@@ -46,7 +47,7 @@ def test_connected_components_random_graphs(spark, gate):
         e = spark.createDataFrame(edges, "id_a: long, id_b: long")
         got = {
             r.node: r.component
-            for r in connected_components(e, small_graph_rows=gate).collect()
+            for r in connected_components(e).collect()
         }
         exp = _union_find(edges)
         # union-find roots ARE component minima: union always parents the
@@ -76,7 +77,7 @@ def test_dedup_survivors_end_to_end(spark, sf_dir):
         assert r.component == r.min_id, r
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, set_local_finish):
     """A 300-node path graph has diameter 299 — one-hop label propagation
     under any sane iteration cap returns wrong labels; pointer jumping must
     converge in O(log n) rounds with every node labeled by the chain min."""
@@ -88,10 +89,8 @@ def test_connected_components_long_chain(spark):
     e = spark.createDataFrame(edges, "id_a: long, id_b: long")
     # gate=0: the local finish would trivialize this — the point is the
     # DISTRIBUTED pointer-jumping convergence on a diameter-299 graph
-    got = {
-        r.node: r.component
-        for r in connected_components(e, small_graph_rows=0).collect()
-    }
+    set_local_finish(0)
+    got = {r.node: r.component for r in connected_components(e).collect()}
     assert set(got.values()) == {min(ids)}
     assert len(got) == len(ids)
 
@@ -108,7 +107,7 @@ def test_pagerank_cycle_uniform(spark):
 
 
 @pytest.mark.parametrize("gate", [None, 0], ids=["local-finish", "distributed"])
-def test_pagerank_matches_numpy_power_iteration(spark, gate):
+def test_pagerank_matches_numpy_power_iteration(spark, set_local_finish, gate):
     """Same damping, same iteration count, dangling mass spread uniformly —
     Spark and a dense numpy reference must agree on a random digraph
     (including dangling nodes) to float tolerance. gate=None exercises the
@@ -141,11 +140,10 @@ def test_pagerank_matches_numpy_power_iteration(spark, gate):
         r = nxt
 
     e = spark.createDataFrame(edges, "id_a: long, id_b: long")
+    set_local_finish(gate)
     got = {
         row.node: row["rank"]
-        for row in pagerank(
-            e, damping=d, n_iter=iters, small_graph_rows=gate
-        ).collect()
+        for row in pagerank(e, damping=d, n_iter=iters).collect()
     }
     assert set(got) == set(nodes)
     for node in nodes:
@@ -153,7 +151,7 @@ def test_pagerank_matches_numpy_power_iteration(spark, gate):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_connected_components_midloop_local_finish(spark):
+def test_connected_components_midloop_local_finish(spark, set_local_finish):
     """Gate sized BETWEEN the initial edge count and the contracted one:
     the loop must run at least one distributed phase, then finish the
     remainder in the single-task union-find and fold it through the
@@ -166,16 +164,14 @@ def test_connected_components_midloop_local_finish(spark):
     edges = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
     # symmetrized initial graph = 398 rows > gate=100 > contracted size
     e = spark.createDataFrame(edges, "id_a: long, id_b: long")
-    got = {
-        r.node: r.component
-        for r in connected_components(e, small_graph_rows=100).collect()
-    }
+    set_local_finish(100)
+    got = {r.node: r.component for r in connected_components(e).collect()}
     assert set(got.values()) == {min(ids)}
     assert len(got) == len(ids)
 
 
 @pytest.mark.parametrize("gate", [None, 0], ids=["local-finish", "distributed"])
-def test_bfs_depths_matches_python_bfs(spark, gate):
+def test_bfs_depths_matches_python_bfs(spark, set_local_finish, gate):
     """BFS layers == collections.deque BFS on random graphs (depths are
     traversal-order independent, so exact equality). gate=None exercises
     the single-task local finish; gate=0 forces the distributed
@@ -184,6 +180,7 @@ def test_bfs_depths_matches_python_bfs(spark, gate):
 
     from mapreduce_model_spark.operators.graph import bfs_depths
 
+    set_local_finish(gate)
     rng = random.Random(23)
     for trial in range(3):
         nodes = list(range(100))
@@ -204,14 +201,11 @@ def test_bfs_depths_matches_python_bfs(spark, gate):
                     exp[y] = exp[x] + 1
                     q.append(y)
         e = spark.createDataFrame(edges, "id_a: long, id_b: long")
-        got = {
-            r.node: r.depth
-            for r in bfs_depths(e, small_graph_rows=gate).collect()
-        }
+        got = {r.node: r.depth for r in bfs_depths(e).collect()}
         assert got == exp, trial
 
 
-def test_bfs_depths_long_chain(spark):
+def test_bfs_depths_long_chain(spark, set_local_finish):
     """A path graph: depth must equal position along the chain — one-hop
     frontier expansion for the full diameter, no shortcuts. (BFS is
     inherently one round per level — unlike CC's pointer jumping there is
@@ -223,15 +217,13 @@ def test_bfs_depths_long_chain(spark):
     from mapreduce_model_spark.operators.graph import bfs_depths
 
     e = spark.createDataFrame(edges, "id_a: long, id_b: long")
-    got = {
-        r.node: r.depth
-        for r in bfs_depths(e, small_graph_rows=0).collect()
-    }
+    set_local_finish(0)
+    got = {r.node: r.depth for r in bfs_depths(e).collect()}
     assert got == {ids[i]: i for i in range(len(ids))}
 
 
 @pytest.mark.parametrize("gate", [None, 0], ids=["local-finish", "distributed"])
-def test_bfs_depths_eccentricity_equals_max_depth(spark, gate):
+def test_bfs_depths_eccentricity_equals_max_depth(spark, set_local_finish, gate):
     """A source whose eccentricity is exactly max_depth completes (the
     final level still gets its empty-frontier check — review-caught
     off-by-one); one less raises — as the SAME driver-side RuntimeError
@@ -243,13 +235,11 @@ def test_bfs_depths_eccentricity_equals_max_depth(spark, gate):
     ids = list(range(700, 706))  # path graph, eccentricity 5 from ids[0]
     edges = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
     e = spark.createDataFrame(edges, "id_a: long, id_b: long")
-    got = {
-        r.node: r.depth
-        for r in bfs_depths(e, max_depth=5, small_graph_rows=gate).collect()
-    }
+    set_local_finish(gate)
+    got = {r.node: r.depth for r in bfs_depths(e, max_depth=5).collect()}
     assert got == {ids[i]: i for i in range(6)}
     with _pytest.raises(RuntimeError, match="max_depth"):
-        bfs_depths(e, max_depth=4, small_graph_rows=gate).collect()
+        bfs_depths(e, max_depth=4).collect()
 
 
 def test_bfs_depths_edgeless_graph_with_source(spark):

@@ -7,6 +7,8 @@ nothing degenerates into an unblocked cartesian product. A regression here
 is a performance bug even when every value still matches the oracle.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -824,15 +826,16 @@ def test_dup_span_merge_never_shuffles_text(spark):
 
 
 def test_semantic_dedup_pair_join_is_cluster_keyed(spark):
-    """The SemDeDup pair join must be keyed on cid (candidate volume
-    Σ|cluster|²), never a cartesian; centroid assignment broadcasts."""
+    """The SemDeDup pair scoring must be grouped by cid (candidate volume
+    Σ|cluster|²): a FlatMapGroupsInPandas keyed on cid, and no cartesian
+    or nested-loop join anywhere in the plan."""
     p = plan(spark, "semantic_dedup")
     assert "CartesianProduct" not in p
-    # BroadcastNestedLoopJoin appears ONLY as the k-row centroid broadcast
-    # (corpus × 8 assign pass); the member-pair join itself must be an
-    # equi-join on cid
-    assert "cid" in p and ("SortMergeJoin" in p or "ShuffledHashJoin" in p or
-                           "BroadcastHashJoin" in p)
+    assert "BroadcastNestedLoopJoin" not in p
+    # formatted explain: the node's detail block lists its grouping first
+    assert re.search(
+        r"\) FlatMapGroupsInPandas\nInput \[[^\n]*\]\nArguments: \[cid#\d+\],", p
+    ), p
 
 
 def test_text_normalize_is_narrow(spark):

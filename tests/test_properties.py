@@ -152,7 +152,7 @@ graphs = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(edges=graphs, gate=st.sampled_from([None, 0, 10]))
-def test_connected_components_property(spark, edges, gate):
+def test_connected_components_property(spark, set_local_finish, edges, gate):
     """CC == driver union-find on arbitrary graphs for ALL three code
     paths: immediate local finish (gate=None), forced-distributed
     (gate=0), and mid-loop local finish (gate=10: small graphs finish
@@ -179,10 +179,8 @@ def test_connected_components_property(spark, edges, gate):
         [(int(a), int(b)) for a, b in edges] or [(0, 0)],
         "id_a: long, id_b: long",
     )
-    got = {
-        r.node: r.component
-        for r in connected_components(e, small_graph_rows=gate).collect()
-    }
+    set_local_finish(gate)
+    got = {r.node: r.component for r in connected_components(e).collect()}
     assert {n: got[n] for n in touched} == exp
 
 

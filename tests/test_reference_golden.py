@@ -3,21 +3,31 @@
 The reference scores correctness by `diff -w` of 26 per-letter files against
 committed goldens (checker/checker.sh:22-36). This runs the full Spark
 pipeline — manifest source → tokenize/normalize → distinct pairs → postings
-→ per-letter ordering → formatted lines — on the reference's real corpora
-(read-only under /root/reference) and compares whitespace-insensitively,
-line order included, exactly like the checker.
+→ per-letter ordering → formatted lines — on the reference's corpora and
+compares whitespace-insensitively, line order included, exactly like the
+checker.
 
-Corpora: test_small.txt (3 docs, goldens test_out_small/) and the full
-test.txt (355 Gutenberg chapters, goldens test_out/, 33,262 lines).
+Corpora: the small corpus (3 docs, vendored with its goldens under
+tests/fixtures/reference_small/) and, when the reference checkout is
+mounted at CHECKER, the full test.txt (355 Gutenberg chapters, goldens
+test_out/, 33,262 lines).
 """
 
 import os
+import pathlib
+import re
 import string
 
 import pytest
 
 from mapreduce_model_spark.operators.inverted_index import format_output, invert
-from mapreduce_model_spark.sources.manifest import read_corpus
+from mapreduce_model_spark.sources.manifest import read_corpus, read_manifest
+from tests.pymodel import (
+    SMALL_GOLDENS,
+    SMALL_MANIFEST,
+    inverted_index,
+    letter_file_text,
+)
 
 CHECKER = "/root/reference/checker"
 
@@ -47,11 +57,30 @@ def _assert_parity(spark, manifest: str, golden_dir: str) -> None:
         assert got.get(letter, []) == expected, f"{letter}.txt mismatch"
 
 
-@pytest.mark.skipif(not os.path.isdir(CHECKER), reason="reference not mounted")
+def test_vendored_small_goldens_match_model_and_excerpts():
+    """The vendored goldens are the pure-Python model's rendering of the
+    vendored corpus, byte for byte, and contain every FIXTURES.md §3
+    excerpt line in order (the excerpts were read off the reference's
+    test_out_small/)."""
+    paths = read_manifest(SMALL_MANIFEST)
+    docs = {i + 1: pathlib.Path(p).read_text() for i, p in enumerate(paths)}
+    postings = inverted_index(docs)
+    for letter in string.ascii_lowercase:
+        golden = pathlib.Path(SMALL_GOLDENS, f"{letter}.txt").read_text()
+        assert golden == letter_file_text(postings, letter), letter
+
+    fixtures_md = pathlib.Path(__file__).resolve().parents[1] / "FIXTURES.md"
+    section = fixtures_md.read_text().split("## 3.")[1].split("## 4.")[0]
+    excerpts = re.findall(r"^([a-z])\.txt:(.*)$", section, re.M)
+    assert excerpts
+    for letter, line in excerpts:
+        want = line.split()
+        golden = pathlib.Path(SMALL_GOLDENS, f"{letter}.txt").read_text()
+        assert golden.split()[: len(want)] == want, letter
+
+
 def test_small_corpus_matches_reference_goldens(spark):
-    _assert_parity(
-        spark, f"{CHECKER}/test_small.txt", f"{CHECKER}/test_out_small"
-    )
+    _assert_parity(spark, SMALL_MANIFEST, SMALL_GOLDENS)
 
 
 @pytest.mark.skipif(not os.path.isdir(CHECKER), reason="reference not mounted")
@@ -76,7 +105,7 @@ def test_cli_matches_reference_goldens(tmp_path):
             "mapreduce_model_spark",
             "2",
             "4",
-            "/root/reference/checker/test_small.txt",
+            SMALL_MANIFEST,
             str(out),
         ],
         capture_output=True,
@@ -84,9 +113,7 @@ def test_cli_matches_reference_goldens(tmp_path):
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    import pathlib
-
-    golden_dir = pathlib.Path("/root/reference/checker/test_out_small")
+    golden_dir = pathlib.Path(SMALL_GOLDENS)
     for letter in "abcdefghijklmnopqrstuvwxyz":
         golden = (golden_dir / f"{letter}.txt").read_text()
         got = (out / f"{letter}.txt").read_text()
@@ -108,7 +135,6 @@ def test_cli_usage_error():
     assert "Usage:" in proc.stderr
 
 
-@pytest.mark.skipif(not os.path.isdir(CHECKER), reason="reference not mounted")
 def test_parallelism_matrix_matches_goldens():
     """checker.sh:141-164 proves the SAME goldens at every (M,R) in
     {1,2,4}² — the one reference-graded property the port previously

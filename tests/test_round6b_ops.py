@@ -8,6 +8,7 @@ with numpy's covariance).
 """
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_model_spark.registry import QUERIES
@@ -139,10 +140,12 @@ def test_semantic_dedup_keep_contract(spark, sf_dir):
         assert first["sem_score"] is None and first["is_kept"], first
 
 
-def test_quality_classifier_matches_numpy_gd(spark, sf_dir):
+@pytest.mark.parametrize("gate", [None, 0], ids=["local-finish", "distributed"])
+def test_quality_classifier_matches_numpy_gd(spark, sf_dir, set_local_finish, gate):
     """Defense in depth behind the unrolled-CTE oracle: rebuild the exact
     features and run the same 10 GD steps in numpy; per-doc probabilities
-    must agree to the rounding grain."""
+    must agree to the rounding grain. gate=None exercises the single-task
+    local finish; gate=0 forces the distributed aggregate loop."""
     import hashlib
 
     from mapreduce_model_spark.queries_text import _QC_B, _QC_ITERS, _QC_LR
@@ -174,6 +177,7 @@ def test_quality_classifier_matches_numpy_gd(spark, sf_dir):
         w = w - _QC_LR * (X.T @ (sig - Y)) / len(X)
     probs = dict(zip(ids, 1 / (1 + np.exp(-X @ w))))
 
+    set_local_finish(gate)
     got = QUERIES["quality_classifier"](spark, sf_dir).collect()
     assert len(got) == len(ids)
     for r in got:
@@ -249,11 +253,14 @@ def _py_bpe(spark, sf_dir):
     return expected, segs, wc
 
 
-def test_bpe_train_matches_python_recompute(spark, sf_dir):
+@pytest.mark.parametrize("gate", [None, 0], ids=["local-finish", "distributed"])
+def test_bpe_train_matches_python_recompute(spark, sf_dir, set_local_finish, gate):
     """The whole greedy training trajectory equals the reference python
     BPE; and the winning-pair count sequence is non-increasing (merges
-    only ever shrink pair mass)."""
+    only ever shrink pair mass). Both regimes: single-task local finish
+    (gate=None) and the distributed merge loop (gate=0)."""
     expected, _, _ = _py_bpe(spark, sf_dir)
+    set_local_finish(gate)
     got = sorted(
         QUERIES["bpe_train"](spark, sf_dir).collect(), key=lambda r: r["step"]
     )
@@ -262,12 +269,15 @@ def test_bpe_train_matches_python_recompute(spark, sf_dir):
     assert all(x >= y for x, y in zip(cnts, cnts[1:]))
 
 
-def test_bpe_encode_matches_python_recompute(spark, sf_dir):
+@pytest.mark.parametrize("gate", [None, 0], ids=["local-finish", "distributed"])
+def test_bpe_encode_matches_python_recompute(spark, sf_dir, set_local_finish, gate):
     """bpe_encode's final segmented dictionary equals the reference python
     BPE's end state for EVERY word: same symbols, same token counts, same
     corpus frequencies; and concatenating a word's symbols reconstructs
-    the word exactly (segmentation never drops or reorders bytes)."""
+    the word exactly (segmentation never drops or reorders bytes). Both
+    regimes: local finish (gate=None) and distributed loop (gate=0)."""
     _, segs, wc = _py_bpe(spark, sf_dir)
+    set_local_finish(gate)
     got = QUERIES["bpe_encode"](spark, sf_dir).collect()
     assert len(got) == len(segs)
     for r in got:

@@ -26,6 +26,7 @@ from mapreduce_model_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from mapreduce_model_spark.registry import QUERIES, table
+from tests.pymodel import SMALL_MANIFEST
 
 
 def _w(i: int) -> str:
@@ -155,7 +156,7 @@ def test_letter_files_datasource_matches_builtin_sink(spark, tmp_path):
     from mapreduce_model_spark.sources.pyds import register
 
     register(spark)
-    index = invert(read_corpus(spark, "/root/reference/checker/test_small.txt"))
+    index = invert(read_corpus(spark, SMALL_MANIFEST))
     builtin_dir, ds_dir = str(tmp_path / "builtin"), str(tmp_path / "ds")
     write_letter_files(index, builtin_dir)
 
@@ -191,7 +192,7 @@ def test_letter_files_stream_writer_end_to_end(spark, tmp_path):
     from mapreduce_model_spark.sources.manifest import read_corpus
     from mapreduce_model_spark.sources.pyds import register
 
-    manifest = "/root/reference/checker/test_small.txt"
+    manifest = SMALL_MANIFEST
     register(spark)
     out = str(tmp_path / "stream_out")
 

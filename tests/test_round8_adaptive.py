@@ -104,30 +104,27 @@ def test_adaptive_kmeans_k_matches_duckdb_cte_everywhere():
 
 
 @pytest.mark.parametrize("gate", [None, 0], ids=["local-finish", "distributed"])
-def test_arrow_kmeans_matches_sql_kmeans(spark, sf_dir, gate):
-    """kmeans_fit_arrow must reproduce kmeans_fit's exact assignment and
-    (to ulp) its centroids — same seeding, same argmax decisions, same
-    empty-cell handling. This is the decision-parity contract the
-    hash-check of semantic_dedup_scaled rides on. gate=None exercises the
-    r12 single-task local finish; gate=0 forces the distributed
-    partial-sums loop (the 100 TB path)."""
-    from mapreduce_model_spark.operators.similarity import (
-        kmeans_fit,
-        kmeans_fit_arrow,
-    )
+def test_arrow_kmeans_matches_sql_kmeans(spark, sf_dir, set_local_finish, gate):
+    """kmeans_fit_arrow must reproduce the SQL k-means contract — the
+    DuckDB oracle recurrence's (_kmeans_cte) exact final assignment
+    ``afin``: same seeding, same argmax decisions, same empty-cell
+    handling. This is the decision-parity contract the hash-checks of the
+    kmeans and SemDeDup faces ride on. gate=None exercises the single-task local finish;
+    gate=0 forces the distributed partial-sums loop (the 100 TB path)."""
+    from mapreduce_model_spark.operators.similarity import kmeans_fit_arrow
+    from mapreduce_model_spark.queries_similarity import _kmeans_cte
+    from tests.oracle_harness import run_oracle
 
+    _, rows = run_oracle(
+        sf_dir, _kmeans_cte(k=23, n_iter=2) + "\nSELECT vid, cid FROM afin"
+    )
+    oracle_a = dict(rows)
+    set_local_finish(gate)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    sql_a = {
-        r["vid"]: r["cid"]
-        for r in kmeans_fit(emb, k=23, n_iter=2, return_assign=True).collect()
-    }
     arrow_a = {
-        r["vid"]: r["cid"]
-        for r in kmeans_fit_arrow(
-            emb, k=23, n_iter=2, small_rows=gate
-        ).collect()
+        r["vid"]: r["cid"] for r in kmeans_fit_arrow(emb, k=23, n_iter=2).collect()
     }
-    assert sql_a == arrow_a
+    assert arrow_a == oracle_a
 
 
 @pytest.mark.parametrize(

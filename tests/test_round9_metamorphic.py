@@ -107,7 +107,7 @@ def test_relabel_invariance_pairs(docs, pairs_fn):
     assert got == expect
 
 
-def test_relabel_invariance_clusters(docs):
+def test_relabel_invariance_clusters(docs, set_local_finish):
     def partitions(frame, unmap=False):
         pairs = lsh_near_dup_pairs(
             minhash_signatures(frame, k=K, shingle_k=SHINGLE_K),
@@ -117,11 +117,12 @@ def test_relabel_invariance_clusters(docs):
             max_bucket=_UNCAPPED,
         ).select("id_a", "id_b")
         comp = {}
-        for r in connected_components(pairs, small_graph_rows=0).collect():
+        for r in connected_components(pairs).collect():
             node = _RELABEL - r.node if unmap else r.node
             comp.setdefault(r.component, set()).add(node)
         return set(frozenset(m) for m in comp.values())
 
+    set_local_finish(0)  # the distributed components loop
     base = partitions(docs)
     relabeled = docs.select(
         (F.lit(_RELABEL) - F.col("doc_id")).alias("doc_id"), "text"

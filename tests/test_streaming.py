@@ -14,6 +14,7 @@ from mapreduce_model_spark.streaming.windows import (
     stream_events,
     tumbling_agg,
 )
+from tests.pymodel import SMALL_MANIFEST
 
 
 def _rows(df, cols):
@@ -552,7 +553,7 @@ def test_streaming_inverted_index_matches_batch(spark, tmp_path):
         start_streaming_index,
     )
 
-    manifest = "/root/reference/checker/test_small.txt"
+    manifest = SMALL_MANIFEST
     register(spark)
     pairs = str(tmp_path / "pairs")
     ckpt = str(tmp_path / "ckpt")

@@ -6,6 +6,9 @@ until round 8 the port proved goldens at one config plus one CLI run.
 
     python tools/parity_matrix.py [manifest golden_dir]
 
+Defaults to the vendored small corpus and its goldens
+(tests/fixtures/reference_small/).
+
 Runs all nine configs in ONE process (the session is stopped and rebuilt
 per config — a fresh SparkContext applies the new master/shuffle conf, and
 the test asserts both took effect, so config bleed between iterations
@@ -20,7 +23,8 @@ import string
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def golden_lines(golden_dir: str, letter: str) -> list[str]:
@@ -66,16 +70,9 @@ def run_config(m: int, r: int, manifest: str, golden_dir: str) -> list[str]:
 
 
 def main() -> int:
-    manifest = (
-        sys.argv[1]
-        if len(sys.argv) > 1
-        else "/root/reference/checker/test_small.txt"
-    )
-    golden_dir = (
-        sys.argv[2]
-        if len(sys.argv) > 2
-        else "/root/reference/checker/test_out_small"
-    )
+    small = os.path.join(REPO, "tests", "fixtures", "reference_small")
+    manifest = sys.argv[1] if len(sys.argv) > 1 else f"{small}/test_small.txt"
+    golden_dir = sys.argv[2] if len(sys.argv) > 2 else f"{small}/test_out_small"
     t0 = time.time()
     fails = 0
     for m in (1, 2, 4):

@@ -1,12 +1,12 @@
-"""Dump `.explain("formatted")` for named queries into plans/r11/.
+"""Dump `.explain("formatted")` for named queries into an output directory.
 
-    python tools/dump_plans_r11.py before q1 q2 ...
-    python tools/dump_plans_r11.py after  q1 q2 ...
+    python tools/snapshot_plans.py OUT_DIR before q1 q2 ...
+    python tools/snapshot_plans.py OUT_DIR after  q1 q2 ...
 
-Writes plans/r11/<query>_<tag>.txt — the optimization-round evidence files
-the judge checks plan claims against. Explain is captured BEFORE execution
-(initial AQE plan) plus a one-line summary of Exchange / join / Python-eval
-node counts so before/after diffs are greppable.
+Writes OUT_DIR/<query>_<tag>.txt (e.g. OUT_DIR = plans/<change>) — the
+before/after evidence a plan claim is checked against. Explain is captured
+BEFORE execution (initial AQE plan) plus a one-line summary of Exchange /
+join / Python-eval node counts so before/after diffs are greppable.
 """
 
 from __future__ import annotations
@@ -20,17 +20,16 @@ from contextlib import redirect_stdout
 
 def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 4:
+        print(__doc__, file=sys.stderr)
+        return 2
+    out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
     from mapreduce_model_spark import registry
     from mapreduce_model_spark.session import get_spark
 
-    spark = get_spark(app_name=f"plans-r11-{tag}")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11"
-    )
+    spark = get_spark(app_name=f"plans-{tag}")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         fn = registry.QUERIES[name]
