@@ -16,14 +16,15 @@ the physical plan):
 - within a letter: postings-length DESC, then word ASC (main.cc:148-156)
 - render ``word:[d1 d2 ...]`` lines into ``<letter>.txt`` (main.cc:158-172)
 
-Scale notes (100 TB corpus): the single shuffle is on ``word``. Hot stopwords
-(``the`` appears in ~every doc — see reference golden test_out/t.txt) make
-``word`` skewed, but the per-file distinct (map-side partial aggregate, free
-under ``dropDuplicates``) bounds any word's pair count at n_docs, and AQE skew
-handling splits oversized post-shuffle partitions. ``collect_set`` postings
-for a true stopword are O(n_docs) — at 100 TB emit ``n_docs`` via count and
-keep postings only below a doc-frequency cap, or store postings as bucketed
-parquet instead of in-memory arrays. No driver-side collects anywhere.
+Scale notes (100 TB corpus): ``invert`` shuffles the distinct pairs, then
+``word``. Hot stopwords (``the`` appears in ~every doc — see reference golden
+test_out/t.txt) make ``word`` skewed, but the pair dedup (map-side partial
+aggregate, free under ``dropDuplicates``) bounds any word's pair count at
+n_docs, and AQE skew handling splits oversized post-shuffle partitions.
+Postings for a true stopword are O(n_docs) — at 100 TB emit ``n_docs`` via
+count and keep postings only below a doc-frequency cap
+(``invert_df_capped``), or store postings as bucketed parquet instead of
+in-memory arrays. No driver-side collects anywhere.
 """
 
 from __future__ import annotations
@@ -54,19 +55,32 @@ def normalize_token(col: Column) -> Column:
 
 
 def tokenize(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """``(doc_id, text)`` → one row per raw whitespace-delimited token.
+    """``(doc_id, text)`` → ``(doc_id, word)``: one row per whitespace-delimited
+    token, normalized; empty words are kept (callers drop them).
 
-    ``split`` on ``\\s+`` mirrors C++ ``operator>>`` (main.cc:73): any run of
-    whitespace separates tokens; a leading run yields one empty token which
-    normalization would keep as ``""`` — dropped later like every empty word.
+    Each line is normalized once — lowercased, then stripped of every char
+    outside ``[a-z]`` and ``\\s`` — and then split on ``\\s+``, which
+    mirrors C++ ``operator>>`` (main.cc:73): any run of whitespace separates
+    tokens, and a leading run yields one empty token.
+    This equals splitting the raw line and applying ``normalize_token`` to
+    each token, because the normalization never creates, removes or moves a
+    ``\\s`` char: lowercasing maps no char into or out of ``\\s``, and the
+    strip keeps ``\\s``. A token that strips to nothing leaves an empty
+    field between its separators, which ``\\s+`` skips and the per-token
+    form emits as ``""`` — the same set once empty words are dropped. So
+    the regex runs once per line, never on the exploded token column (where
+    Catalyst would copy it into both the empty-word filter and the
+    projection).
+
     Narrow op: stays inside whole-stage codegen, no shuffle — but the
     explode multiplies rows ~|tokens|×, so an under-partitioned scan is
     spread first (no-op on many-split corpora).
     """
     docs = spread_for_fanout(docs, id_col)
+    line = F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z\s]", "")
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("token"),
+        F.explode(F.split(line, r"\s+")).alias("word"),
     )
 
 
@@ -75,48 +89,44 @@ def word_doc_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
 
     Matches the reference's per-file ``std::set`` dedup + global merged
     ``std::set`` (main.cc:62-63, 17, 78-96). ``dropDuplicates`` gives the
-    same set semantics with a map-side partial aggregate (the per-file
-    combine, main.cc:62-63) for free.
-
-    ``distinct=False`` skips the dedup exchange for consumers whose own
-    aggregation already has set semantics (``invert``'s ``collect_set``) —
-    one shuffle of the pair stream instead of two.
+    same set semantics as a codegen ``HashAggregate`` on ``(word, doc_id)``
+    with a map-side partial aggregate (the per-file combine, main.cc:62-63).
     """
-    return _word_doc_pairs(docs, text_col, id_col, distinct=True)
-
-
-def _word_doc_pairs(
-    docs: DataFrame, text_col: str, id_col: str, distinct: bool
-) -> DataFrame:
-    pairs = (
+    return (
         tokenize(docs, text_col, id_col)
-        .select(normalize_token(F.col("token")).alias("word"), "doc_id")
-        .filter(F.length("word") > 0)  # main.cc:89 vs 132-137 — '' never output
+        .filter(F.col("word") != "")  # main.cc:89 vs 132-137 — '' never output
+        .select("word", "doc_id")
+        .dropDuplicates(["word", "doc_id"])
     )
-    return pairs.dropDuplicates(["word", "doc_id"]) if distinct else pairs
 
 
 def invert(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Full index: ``(letter, word, docs, n_docs)``.
 
-    - ``docs`` = ascending distinct doc ids (main.cc:120-127, 143). We use
-      ``sort_array(collect_set(...))`` — the reference relies on an explicit
-      post-sort too, since its insertion order is nondeterministic.
+    - ``docs`` = ascending distinct doc ids (main.cc:120-127, 143):
+      ``sort_array(collect_list(...))`` over distinct pairs — the reference
+      relies on an explicit post-sort too, since its insertion order is
+      nondeterministic.
     - ``letter`` = first char (main.cc:88-91).
     - Row order inside a letter: ``n_docs`` DESC, ``word`` ASC
       (comparator main.cc:148-156).
 
-    One hash-partition shuffle on ``word`` (distinct + groupBy collapse into
-    one exchange under Catalyst); the final order is applied per letter at
-    write time, not as a global sort.
+    At most two exchanges, both of narrow rows: the distinct ``(word,
+    doc_id)`` pairs (none when the input is already hash-partitioned on
+    ``doc_id``, as ``spread_for_fanout`` leaves an under-partitioned scan),
+    then ``word``. The dedup is a codegen ``HashAggregate`` that drops a
+    document's repeated tokens before any array is built, so
+    ``collect_list`` sees each pair once. ``collect_set`` over the raw
+    tokens would save the first exchange, but it runs in an
+    ``ObjectHashAggregate``, which falls back to sort-based aggregation once
+    a task holds 128 keys — it would sort every task's whole token stream.
+    The final order is applied per letter at write time, not as a global
+    sort.
     """
     postings = (
-        # distinct=False: collect_set IS the set semantics (main.cc:62-63) —
-        # its map-side partial is the per-file combine, and skipping the
-        # separate dropDuplicates exchange halves the shuffled pair volume
-        _word_doc_pairs(docs, text_col, id_col, distinct=False)
+        word_doc_pairs(docs, text_col, id_col)
         .groupBy("word")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("docs"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
         .withColumn("n_docs", F.size("docs"))
         .withColumn("letter", F.substring("word", 1, 1))
     )

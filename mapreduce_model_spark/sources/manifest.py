@@ -13,6 +13,12 @@ corpus is the big data. We read all listed files in one distributed
 against a broadcast path→id map built from manifest order. ``doc_id`` must be
 the manifest ordinal — never a path hash (SURVEY.md §1.1).
 
+The path→id map is built from a pyarrow Table, so it plans as a JVM-side
+``LocalRelation`` (``LocalTableScan``). A frame built from a Python list
+plans as ``Scan ExistingRDD`` over a Python RDD instead, and every execution
+of it — the broadcast, once per query that reads the corpus — starts Python
+workers to deserialize the rows.
+
 Scale: one scan over N files; the path→id map is O(N) strings broadcast to
 executors — fine up to tens of millions of files; beyond that, materialize
 the manifest as a small parquet dim and broadcast-join on path.
@@ -23,6 +29,7 @@ from __future__ import annotations
 import os
 import posixpath
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,8 +77,10 @@ def read_paths(spark: SparkSession, paths: list[str]) -> DataFrame:
     ids). The programmatic front door for callers whose file lists don't
     come from a whitespace-tokenized manifest (which cannot represent
     paths containing spaces — reference ``operator>>`` semantics)."""
-    id_rows = [(os.path.abspath(p), i + 1) for i, p in enumerate(paths)]
-    path_to_id = spark.createDataFrame(id_rows, "path: string, doc_id: int")
+    path_to_id = spark.createDataFrame(pa.table({
+        "path": pa.array([os.path.abspath(p) for p in paths], pa.string()),
+        "doc_id": pa.array(range(1, len(paths) + 1), pa.int32()),
+    }))
     # Read each distinct file ONCE — a path listed twice is two doc ids
     # (main.cc:79 positional identity), and the path→id join below fans
     # each line out to every id holding that path; passing the duplicate

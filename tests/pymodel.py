@@ -10,6 +10,10 @@ import os
 import re
 
 _NON_LETTER = re.compile(r"[^a-z]")
+# C-locale isspace (main.cc:73, operator>>) — also Java's regex \s. Not
+# str.split(), which also splits on \x1c-\x1f, \x85, NBSP, U+2000-U+200A
+# and U+3000.
+_WHITESPACE = re.compile(r"[ \t\n\v\f\r]+")
 
 # The reference checker's 3-document small corpus (manifest + inputs) and
 # its 26 <letter>.txt goldens, vendored under tests/fixtures/ (goldens
@@ -28,7 +32,7 @@ def inverted_index(docs: dict[int, str]) -> dict[str, list[int]]:
     """word -> ascending distinct doc ids; empty words dropped."""
     postings: dict[str, set[int]] = {}
     for doc_id, text in docs.items():
-        for token in text.split():
+        for token in _WHITESPACE.split(text):
             word = normalize(token)
             if word:
                 postings.setdefault(word, set()).add(doc_id)

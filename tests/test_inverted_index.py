@@ -4,6 +4,8 @@ The 3-document micro-corpus and expected excerpts come from FIXTURES.md §3
 (mirroring the reference's checker/test_in_small + test_out_small goldens).
 """
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -95,3 +97,60 @@ def test_invert_on_sf0001_documents(spark, sf_dir):
     }
     expected = {(w, d) for w, ids in model.items() for d in ids}
     assert got_pairs == expected
+
+
+# Adversarial token and separator pools: C-locale whitespace other than
+# space, digit- and punctuation-only tokens, uppercase, non-ASCII spaces
+# that do NOT separate tokens (NBSP, U+3000, \x1c, \x85, U+2003), and the
+# two non-ASCII chars whose lowercase holds an ASCII letter (U+212A → k,
+# U+0130 → i + U+0307).
+_TOKENS = [
+    "the", "The", "SKY", "MiXeD", "don't", "e-mail", "x1y2", "2024", "007",
+    "---", "!?", "'", "ab\u00a0cd", "AB\u3000CD", "a\x1cb", "a\x85b",
+    "a\u2003b", "\u212aelvin", "\u0130stanbul", "caf\u00e9", "\u03a3\u0391\u03a3",
+]
+_SEPS = [" ", "  ", "\t", "\v", "\f", "\r", "\n", " \t\v\f\r "]
+
+
+def _adversarial_lines(rng):
+    """(doc_id, line) rows: several lines per document, including empty,
+    whitespace-only, leading- and trailing-separator lines."""
+    rows = []
+    for doc_id in range(1, 25):
+        for _ in range(rng.randint(1, 4)):
+            toks = [rng.choice(_TOKENS) for _ in range(rng.randint(0, 8))]
+            line = "".join(t + rng.choice(_SEPS) for t in toks)
+            if rng.random() < 0.3:
+                line = rng.choice(_SEPS) + line
+            if rng.random() < 0.5:
+                line = line.rstrip(" \t\n\v\f\r")
+            rows.append((doc_id, line))
+    return rows
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_adversarial_lines_match_model(spark, seed):
+    """Line-level normalization (tokenize) equals the per-token form:
+    word_doc_pairs and invert match both the pure-Python model and a Spark
+    split-then-``normalize_token`` pipeline on adversarial whitespace,
+    punctuation, case and non-ASCII input."""
+    rows = _adversarial_lines(random.Random(seed))
+    docs = spark.createDataFrame(rows, "doc_id: int, text: string")
+    by_doc: dict[int, list[str]] = {}
+    for doc_id, line in rows:
+        by_doc.setdefault(doc_id, []).append(line)
+    model = py_invert({d: "\n".join(lines) for d, lines in by_doc.items()})
+    expected = {(w, d) for w, ids in model.items() for d in ids}
+
+    per_token = (
+        docs.select("doc_id", F.explode(F.split("text", r"\s+")).alias("token"))
+        .select(normalize_token(F.col("token")).alias("word"), "doc_id")
+        .filter(F.col("word") != "")
+    )
+    assert {(r.word, r.doc_id) for r in per_token.collect()} == expected
+
+    pairs = [(r.word, r.doc_id) for r in word_doc_pairs(docs).collect()]
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) == expected
+    assert {r.word: list(r.docs) for r in invert(docs).collect()} == model
+    assert {"kelvin", "istanbul", "abcd", "ab", "caf"} <= set(model)

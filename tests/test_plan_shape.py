@@ -102,6 +102,53 @@ def test_inverted_index_single_wide_shuffle(spark):
     assert p.count("hashpartitioning") <= 2, p
 
 
+def test_read_corpus_id_table_is_jvm_local(spark):
+    """The path→doc_id side of read_corpus is a LocalTableScan: a Python
+    RDD side (Scan ExistingRDD) starts Python workers on every execution."""
+    from mapreduce_model_spark.sources.manifest import read_corpus
+    from tests.pymodel import SMALL_MANIFEST
+
+    df = read_corpus(spark, SMALL_MANIFEST)
+    p = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    assert "LocalTableScan" in p
+    assert "BroadcastExchange" in p
+    assert "ExistingRDD" not in p
+
+
+def test_inverted_index_normalizes_lines_not_tokens(spark):
+    """The [^a-z] strip runs once per line, inside the explode's input —
+    never on the exploded token column."""
+    p = plan(spark, "inverted_index")
+    first_args = re.findall(r"regexp_replace\(([^,]*),", p)
+    assert first_args, p
+    assert all(re.fullmatch(r"lower\(text#\d+L?\)", a) for a in first_args), first_args
+    assert re.search(r"explode\(split\(regexp_replace\(lower\(text#", p), p
+
+
+def test_invert_collects_from_distinct_pairs(spark):
+    """invert's word-keyed collect_list reads from a codegen HashAggregate
+    keyed on (word, doc_id), never collect_set over the raw token stream.
+    Planned over a frame of its own: the documents pairs that
+    inverted_index_dfcap persists would replace the subtree with an
+    InMemoryTableScan."""
+    from mapreduce_model_spark.operators.inverted_index import invert
+
+    docs = spark.createDataFrame([(1, "a b a"), (2, "b c")], "doc_id: long, text: string")
+    p = spark._jvm.PythonSQLUtils.explainString(
+        invert(docs)._jdf.queryExecution(), "formatted"
+    )
+    assert "collect_set" not in p
+    tree = re.findall(r"(\w+) \(\d+\)$", p.split("\n\n")[0], flags=re.M)
+    chain = ">".join(n for n in tree if n != "Exchange")  # top-down
+    assert "ObjectHashAggregate>HashAggregate" in chain, chain
+    partial = re.search(
+        r"ObjectHashAggregate\nInput \[\d+\]: [^\n]*\nKeys \[1\]: \[word#\d+\]\n"
+        r"Functions \[1\]: \[partial_collect_list\(doc_id#", p
+    )
+    assert partial, p
+    assert re.search(r"HashAggregate\nInput[^\n]*\nKeys \[2\]: \[word#\d+, doc_id#\d+L?\]", p), p
+
+
 def test_partition_pruning_on_partitioned_write(spark, tmp_path):
     """Hive-partitioned layout + a partition-column predicate must prune at
     planning time: the scan's partition filter appears in the plan and only

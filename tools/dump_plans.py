@@ -41,10 +41,14 @@ COMMENTARY: dict[str, str] = {
         "dims of a few GB broadcast, the fact never repartitions."
     ),
     "inverted_index_agg": (
-        "The reference pipeline (A3-A14). Tokenize/normalize/filter fuse "
-        "into the scan stage; `collect_set` carries dedup inside the ONE "
-        "hash exchange on `word` (its partial aggregation is the "
-        "reference's per-file combine, A7); the final order is the only "
+        "The reference pipeline (A3-A14). Each line is normalized once "
+        "inside the Generate's input (never on the exploded token column); "
+        "the empty-word filter fuses into the same stage. The (word, doc_id) "
+        "dedup is a codegen HashAggregate (its partial aggregation is the "
+        "reference's per-file combine, A7) with no exchange of its own: the "
+        "spread exchange on `doc_id` already co-locates each document's "
+        "pairs. `collect_list` then builds the postings from distinct pairs "
+        "across ONE hash exchange on `word`; the final order is the only "
         "other exchange (rangepartitioning for the sort). Hot words "
         "(stopwords) are the skew risk — the salted twin "
         "(`inverted_index_salted`) splits them in two phases."
